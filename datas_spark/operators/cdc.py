@@ -227,12 +227,12 @@ def scd2_repair_partitioned(
     # materialize before the overwrite: the plan reads the very files
     # dynamic overwrite replaces (same contract as upsert_partitioned)
     repaired = repaired.localCheckpoint(eager=True)
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        repaired.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    (
+        repaired.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def scd2_as_of(history: DataFrame, ts) -> DataFrame:

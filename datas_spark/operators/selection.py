@@ -255,28 +255,11 @@ def middle_confidence_sample(
     n: int = 5,
     low_th: float = 0.25,
     up_th: float = 0.75,
-    skew_resistant: bool = False,
-    exact_percentiles: bool = True,
 ) -> DataFrame:
     """A1+A2 composed — the full ``sample_middle_confidence_data``
-    semantics (main.py:402-450) as one lazy plan.
-
-    ``skew_resistant=True`` routes the stride through
-    ``stride_sample_skew_resistant`` (identical output): flip it when
-    one cluster dwarfs the rest — a boilerplate-dominated source tag, a
-    single dominant language — and the per-cluster window would
-    serialize that cluster onto one task. The heuristic worth
-    automating upstream: max cluster count ≳ rows/partitions × 10.
-    ``exact_percentiles=False`` switches the band bounds to the
-    constant-memory ``approx_percentile`` sketch (edge rows may flip —
-    see ``percentile_band_filter``); flip BOTH flags for the full
-    100 TB configuration.
-    """
-    band = percentile_band_filter(
-        df, cluster_col, conf_col, n, low_th, up_th, exact=exact_percentiles
-    )
-    if skew_resistant:
-        return stride_sample_skew_resistant(band, cluster_col, order_col, n)
+    semantics (main.py:402-450) as one lazy plan: exact percentile band
+    bounds, then the per-cluster window stride."""
+    band = percentile_band_filter(df, cluster_col, conf_col, n, low_th, up_th)
     return stride_sample(band, cluster_col, order_col, n)
 
 

@@ -67,7 +67,6 @@ def curate_corpus(
     contamination_min_shared: int = 5,
     temperature: float | None = None,
     split_weights: dict[str, float] | None = None,
-    materialize_stages: bool = True,
     stage_ids: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Run the full curation recipe; returns the surviving rows of
@@ -125,17 +124,15 @@ def curate_corpus(
     9. temperature sample — rebalance ``domain_col`` mixture, if given
     10. hash split        — deterministic train/test labels, if given
 
-    ``materialize_stages=True`` (default) lazily checkpoints the
-    survivor frame after each stage whose DOWNSTREAM consumer
-    references it more than once (dedup feeds both the contamination
-    shingles and the semi-join; temperature reads its input for counts
-    AND rows). Without a cut, every stage's stats branch re-expands the
-    whole upstream tree, so a k-stage recipe re-scans and re-tokenizes
-    the corpus O(2^k) times — measured 20x slower at sf0.1. A 100 TB
-    run materializes between major stages for exactly this reason
-    (checkpoint locally, or swap for an intermediate parquet write
-    between jobs); set False to keep one pure lazy plan for plan-level
-    inspection.
+    The survivor frame is lazily checkpointed after each stage whose
+    DOWNSTREAM consumer references it more than once (dedup feeds both
+    the contamination shingles and the semi-join; temperature reads its
+    input for counts AND rows). Without a cut, every stage's stats
+    branch re-expands the whole upstream tree, so a k-stage recipe
+    re-scans and re-tokenizes the corpus O(2^k) times — measured 20x
+    slower at sf0.1. A 100 TB run materializes between major stages for
+    exactly this reason (checkpoint locally, or swap for an
+    intermediate parquet write between jobs).
 
     ``stage_ids`` (optional, for `curate_audit`): a dict the recipe
     fills with each DROPPING stage's survivor-id frame, keyed
@@ -145,7 +142,7 @@ def curate_corpus(
     """
 
     def cut(frame: DataFrame) -> DataFrame:
-        return frame.localCheckpoint(eager=False) if materialize_stages else frame
+        return frame.localCheckpoint(eager=False)
 
     def snap(name: str, frame: DataFrame) -> None:
         if stage_ids is not None:

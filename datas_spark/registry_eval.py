@@ -599,7 +599,7 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it is the barrier that keeps the 8 md5 digests evaluated once per
     # base row. Measured 25.2 -> 16.3 s at sf1 (sf0.1 3.8 -> 2.9 s),
     # hash-identical. Two MORE reverted attempts (round 12, interleaved
-    # same-JVM A/B at sf1, scripts/ab_bootstrap.py): (c) fanning per
+    # same-JVM A/B at sf1, OPTIMIZATION_r12.md §4): (c) fanning per
     # DIGEST (posexplode ×8, four (w·cents, w) lanes per aggregate row,
     # reshaped to 32 replicas post-agg) — 4× fewer Generate rows but
     # LOSES 13-15 s -> 17-20 s (the wider agg row + per-row string copy

@@ -13,12 +13,50 @@ batch results.
 Scale notes: watermarks bound state; ``dropDuplicatesWithinWatermark``
 bounds the dedup map; session windows use the native
 ``session_window`` (state store, not a giant sort).
+
+Every ``foreachBatch`` sink below is started by ``_start``
+(availableNow trigger over the caller's checkpoint), and every one that
+keeps state shares one exactly-once commit protocol:
+
+- Store writes (``_write_batch_partition``) are stamped with the
+  micro-batch id and dynamically overwrite only their own
+  ``__batch=<B>`` partition, so a replayed batch replaces its partial
+  output instead of appending duplicates. A replay also excludes its
+  own partition from every store probe: a doc must not match its own
+  half-written state.
+- ``_commit`` writes the batch's marker under ``<state>/_commits/``
+  LAST, after every store write — one atomic file create, the unit of
+  atomicity for multi-store sinks. The marker is ``batch-<B>``, or
+  ``batch-<B>-fold`` when the batch folded the whole store into its own
+  partition.
+- ``_is_committed`` is the replay guard: a redelivered batch whose
+  marker exists under either name is skipped. It makes two ``exists``
+  probes and never lists ``_commits/``, which grows by one file per
+  batch forever.
+- The newest ``-fold`` marker is the fold watermark: partitions older
+  than it are dead (their contents live inside the fold partition),
+  readers skip them and they are deleted after the commit as GC.
+  ``_committed_state`` and ``_live_store`` are the only watermark
+  readers; readers of sum-merged stores see only committed partitions
+  at or above the watermark, so a half-written or superseded partition
+  is never double counted. ``_fold_commit`` is the one fold step for
+  stores that merge by an aggregate (sum for count-min, trending and
+  the sequential monitor; max for HLL): once ``compact_every``
+  committed batches are live, the batch merges them into its own
+  partition under a ``-fold`` marker.
+
+The checkpoint dir and the state dir are a UNIT: micro-batch ids come
+from the checkpoint, and the markers record which of those ids fully
+wrote their stores. Pointing a FRESH checkpoint at an existing state
+dir restarts ids at 0 and the guard skips them as redeliveries; wipe
+(or version) both together.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, "
@@ -177,54 +215,154 @@ def _read_store(spark, path: str) -> DataFrame | None:
         raise
 
 
-"""NOTE on the batch-commit scheme shared by the incremental dedup
-sinks: the checkpoint dir and the state dir are a UNIT — micro-batch
-ids come from the checkpoint, and the ``_commits/`` markers in the
-state dir record which of those ids fully wrote their stores. Pointing
-a FRESH checkpoint at an existing state dir restarts ids at 0 and the
-guard would skip live batches; wipe (or version) both together."""
-
-
-def _batch_marker(spark, state_path: str, batch_id: int):
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(
-        state_path + "/_commits", f"batch-{batch_id}"
+def _markers(spark, state_path: str, batch_id: int):
+    """(fs, plain marker, fold marker) paths of one batch."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    commits = Path(state_path + "/_commits")
+    fs = commits.getFileSystem(spark._jsc.hadoopConfiguration())
+    return (
+        fs,
+        Path(commits, f"batch-{batch_id}"),
+        Path(commits, f"batch-{batch_id}-fold"),
     )
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, marker
 
 
-def _batch_committed(spark, state_path: str, batch_id: int) -> bool:
-    fs, marker = _batch_marker(spark, state_path, batch_id)
-    return bool(fs.exists(marker))
+def _is_committed(spark, state_path: str, batch_id: int) -> bool:
+    """Replay guard: True when the batch committed under either marker
+    name."""
+    fs, plain, fold = _markers(spark, state_path, batch_id)
+    return bool(fs.exists(plain) or fs.exists(fold))
 
 
-def _commit_batch(spark, state_path: str, batch_id: int) -> None:
-    """Write the commit marker LAST, after every store write of the
-    batch — the marker is the unit of atomicity for multi-store sinks
-    (all three parquet writes happened, or the batch replays)."""
-    fs, marker = _batch_marker(spark, state_path, batch_id)
+def _commit(spark, state_path: str, batch_id: int, fold: bool) -> None:
+    """Write the batch's commit marker — LAST, after every store write."""
+    fs, plain, folded = _markers(spark, state_path, batch_id)
+    marker = folded if fold else plain
     fs.mkdirs(marker.getParent())
     fs.create(marker, True).close()
 
 
+def _committed_state(spark, state_path: str) -> tuple[set, int]:
+    """(committed batch ids, fold watermark) from the _commits dir.
+    Watermark is the newest batch that folded the whole store into its
+    own partition; -1 when no fold has happened yet."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(state_path + "/_commits")
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    committed: set = set()
+    watermark = -1
+    if not fs.exists(p):
+        return committed, watermark
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if not name.startswith("batch-"):
+            continue
+        body = name[len("batch-"):]
+        fold = body.endswith("-fold")
+        if fold:
+            body = body[: -len("-fold")]
+        try:
+            bid = int(body)
+        except ValueError:
+            continue
+        committed.add(bid)
+        if fold:
+            watermark = max(watermark, bid)
+    return committed, watermark
+
+
+def _live_store(spark, path: str, state_path: str, exclude_batch: int):
+    """Committed, non-superseded partitions — the only rows a reader of
+    a sum-merged store may aggregate. ``exclude_batch`` drops the
+    (possibly half-written) partition of a replaying batch."""
+    committed, watermark = _committed_state(spark, state_path)
+    store = _read_store(spark, path)
+    if store is None or not committed:
+        return None
+    live = sorted(b for b in committed if b >= watermark and b != exclude_batch)
+    if not live:
+        return None
+    return store.where(F.col("__batch").isin(live))
+
+
 def _write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
     """Idempotent per-batch store write: stamp rows with ``__batch`` and
-    dynamically overwrite ONLY that partition, so a replayed (crashed or
-    redelivered) batch replaces its own partial output instead of
-    appending duplicates."""
-    spark = df.sparkSession
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn("__batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("__batch")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    dynamically overwrite ONLY that partition."""
+    (
+        df.withColumn("__batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch")
+        .parquet(path)
+    )
+
+
+def _compact_batch_partitions(spark, path: str, keep_from: int) -> None:
+    """Drop ``__batch=k`` partition dirs with k < keep_from — the TTL
+    compaction for batch-stamped state stores. Driver-side metadata
+    operation: |expired batches| directory deletes, never a data scan."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if name.startswith("__batch="):
+            try:
+                bid = int(name.split("=", 1)[1])
+            except ValueError:
+                continue
+            if bid < keep_from:
+                fs.delete(st.getPath(), True)
+
+
+def _fold_commit(
+    spark,
+    state_path: str,
+    store_path: str,
+    batch_id: int,
+    part: DataFrame,
+    keys: list[str],
+    merge,
+    compact_every: int,
+) -> None:
+    """Write and commit one batch of an aggregate-merged store. Once
+    ``compact_every`` committed batches are live, ``part`` first merges
+    them per ``keys`` with the aggregate ``merge`` (``F.sum`` /
+    ``F.max``, each column kept at its own type), and the batch commits
+    under a ``-fold`` marker that supersedes the older partitions."""
+    committed, watermark = _committed_state(spark, state_path)
+    fold = sum(1 for b in committed if b >= watermark) >= compact_every
+    if fold:
+        prior = _live_store(spark, store_path, state_path, exclude_batch=batch_id)
+        if prior is not None:
+            part = (
+                part.unionByName(prior.select(*part.columns))
+                .groupBy(*keys)
+                .agg(
+                    *[
+                        merge(f.name).cast(f.dataType).alias(f.name)
+                        for f in part.schema.fields
+                        if f.name not in keys
+                    ]
+                )
+            )
+    _write_batch_partition(part, batch_id, store_path)
+    _commit(spark, state_path, batch_id, fold)
+    if fold:
+        _compact_batch_partitions(spark, store_path, keep_from=batch_id)
+
+
+def _start(writer: DataStreamWriter, sink, checkpoint_path: str):
+    """Start ``sink`` as the writer's foreachBatch over
+    ``checkpoint_path``, draining what is available now."""
+    return (
+        writer.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def incremental_dedup_sink(
@@ -248,13 +386,8 @@ def incremental_dedup_sink(
     batches, earlier batches win. The anti-join broadcasts or shuffles
     per AQE's view of the store size.
 
-    Exactly-once across crashes: every store write is stamped with the
-    micro-batch id and dynamically overwrites only its own ``__batch``
-    partition; a commit marker under ``_commits/`` is written last, and
-    a redelivered batch whose marker exists is skipped outright. A
-    batch that crashed mid-write replays, excludes its own partial
-    partition from the store probe (a doc must not anti-join against
-    its own half-written fingerprints), and overwrites it.
+    Exactly-once across crashes by the shared commit protocol (module
+    docstring).
 
     Returns the started StreamingQuery (writes survivors to
     ``state_path + '/rows'``, fingerprints to ``state_path + '/seen'``).
@@ -264,7 +397,7 @@ def incremental_dedup_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _batch_committed(spark, state_path, batch_id):
+        if _is_committed(spark, state_path, batch_id):
             return
         firsts = exact_dedup(batch_df, text_col, id_col).withColumn(
             "__fp", F.xxhash64(normalized_text(text_col))
@@ -284,14 +417,9 @@ def incremental_dedup_sink(
             batch_id,
             seen_path,
         )
-        _commit_batch(spark, state_path, batch_id)
+        _commit(spark, state_path, batch_id, fold=False)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def join_streams(
@@ -347,26 +475,6 @@ def join_streams(
     )
 
 
-def _compact_batch_partitions(spark, path: str, keep_from: int) -> None:
-    """Drop ``__batch=k`` partition dirs with k < keep_from — the TTL
-    compaction for batch-stamped state stores. Driver-side metadata
-    operation: |expired batches| directory deletes, never a data scan."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith("__batch="):
-            try:
-                bid = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if bid < keep_from:
-                fs.delete(st.getPath(), True)
-
-
 def incremental_near_dedup_sink(
     stream: DataFrame,
     state_path: str,
@@ -403,14 +511,8 @@ def incremental_near_dedup_sink(
     nothing about empty sets — and pass through as always-fresh; run
     ``incremental_dedup_sink`` alongside for exact short-doc dedup.
 
-    Exactly-once across crashes (same scheme as
-    ``incremental_dedup_sink``): all three store writes are stamped
-    with the micro-batch id and dynamically overwrite only their own
-    ``__batch`` partition, a ``_commits/`` marker is written after the
-    third, a redelivered committed batch is skipped, and a replayed
-    crashed batch excludes its own partial partitions from the band
-    probe (otherwise its docs would match their half-written bands and
-    be dropped as near-dups of themselves) before overwriting them.
+    Exactly-once across crashes by the shared commit protocol (module
+    docstring).
 
     ``retain_batches=N`` bounds the probe state: after each commit,
     band/signature partitions older than the last N batches are
@@ -467,7 +569,7 @@ def incremental_near_dedup_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _batch_committed(spark, state_path, batch_id):
+        if _is_committed(spark, state_path, batch_id):
             return
         # 1. in-batch near-dedup: keep the smallest id per component
         pairs = minhash_lsh_pairs(
@@ -523,18 +625,13 @@ def incremental_near_dedup_sink(
             batch_id,
             bands_path,
         )
-        _commit_batch(spark, state_path, batch_id)
+        _commit(spark, state_path, batch_id, fold=False)
         if retain_batches is not None:
             keep_from = batch_id - int(retain_batches) + 1
             _compact_batch_partitions(spark, bands_path, keep_from)
             _compact_batch_partitions(spark, sigs_path, keep_from)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def join_streams_outer(
@@ -615,44 +712,22 @@ def materialize_window_counts(
     agg = windowed_event_agg(stream, window=window, watermark=watermark)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.withColumn(
-                    "window_date", F.date_format("window_start", "yyyyMMddHHmmss")
-                )
-                .write.mode("overwrite")
-                .partitionBy("window_date", "event_type")
-                .parquet(out_path)
+        (
+            batch_df.withColumn(
+                "window_date", F.date_format("window_start", "yyyyMMddHHmmss")
             )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("window_date", "event_type")
+            .parquet(out_path)
+        )
 
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(agg.writeStream.outputMode("update"), _sink, checkpoint_path)
 
 
 # ---------------------------------------------------------------------------
 # streaming HyperLogLog: incremental distinct count with durable registers
 # ---------------------------------------------------------------------------
-
-def _count_batch_partitions(spark, path: str) -> int:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return 0
-    return sum(
-        1 for st in fs.listStatus(p) if st.getPath().getName().startswith("__batch=")
-    )
-
 
 def incremental_hll_sink(
     stream: DataFrame,
@@ -667,20 +742,13 @@ def incremental_hll_sink(
     ``__batch`` partition under ``state_path + '/regs'``; the running
     estimate at any time is `hll_state_estimate` over the store.
 
-    Why this shape is crash-proof with almost no machinery: HLL merge
-    is ``max`` per bucket — idempotent AND commutative — so a replayed
-    or half-written batch can never corrupt the estimate; re-merging
-    the same registers is a no-op. The commit marker + per-partition
-    dynamic overwrite (shared with the dedup sinks) only exist to keep
-    the STORE tidy, not to protect correctness.
-
-    State stays bounded by TTL-free compaction: once ``compact_every``
-    batch partitions accumulate, the batch folds the whole store into
-    its own partition (a <= 2^p-row merge) and the older partitions are
-    dropped after commit — so the store never exceeds
-    ``compact_every * 2^p`` rows regardless of stream lifetime, and a
-    crash between commit and cleanup merely defers cleanup to the next
-    compaction (max-merge makes the overlap harmless).
+    HLL merge is ``max`` per bucket — idempotent AND commutative — so a
+    replayed or half-written batch can never corrupt the estimate, and
+    `hll_state_estimate` may merge every partition it finds. The commit
+    protocol (module docstring) only keeps the STORE tidy: every
+    ``compact_every`` committed batches the store folds (max-merge, a
+    <= 2^p-row merge) into the current batch's partition, so it holds
+    about ``compact_every * 2^p`` rows regardless of stream lifetime.
     """
     from datas_spark.operators.sketches import hll_registers
 
@@ -688,32 +756,15 @@ def incremental_hll_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _batch_committed(spark, state_path, batch_id):
+        if _is_committed(spark, state_path, batch_id):
             return
         regs = hll_registers(batch_df, value_col, p)
-        compact = _count_batch_partitions(spark, regs_path) >= compact_every
-        if compact:
-            store = _read_store(spark, regs_path)
-            if store is not None:
-                prior = store.where(F.col("__batch") != batch_id).select(
-                    "bucket", "max_rho"
-                )
-                regs = (
-                    regs.unionByName(prior)
-                    .groupBy("bucket")
-                    .agg(F.max("max_rho").alias("max_rho"))
-                )
-        _write_batch_partition(regs, batch_id, regs_path)
-        _commit_batch(spark, state_path, batch_id)
-        if compact:
-            _compact_batch_partitions(spark, regs_path, keep_from=batch_id)
+        _fold_commit(
+            spark, state_path, regs_path, batch_id, regs, ["bucket"], F.max,
+            compact_every,
+        )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def hll_state_estimate(spark, state_path: str, p: int = 12) -> DataFrame:
@@ -735,73 +786,6 @@ def hll_state_estimate(spark, state_path: str, p: int = 12) -> DataFrame:
 # ---------------------------------------------------------------------------
 # streaming count-min: incremental frequency sketch with durable state
 # ---------------------------------------------------------------------------
-#
-# Unlike HLL (max-merge, idempotent — replays are harmless by algebra),
-# CMS merges by cellwise SUM, so double-reading a partition DOUBLE
-# COUNTS. Correctness therefore hangs on two invariants, both enforced
-# by a single atomic marker create per batch:
-#
-#   1. the read path only sees COMMITTED batch partitions (a crashed
-#      half-written partition is invisible until its replay commits);
-#   2. a compaction batch's commit marker (`batch-<B>-fold`) IS the
-#      compaction watermark: partitions older than the newest fold
-#      marker are dead (their contents live inside partition B) and are
-#      ignored by every reader and later deleted as GC. Marker write is
-#      one FS create — there is no window where the fold is visible
-#      without its watermark or vice versa.
-
-
-def _committed_state(spark, state_path: str) -> tuple[set, int]:
-    """(committed batch ids, fold watermark) from the _commits dir.
-    Watermark is the newest batch that folded the whole store into its
-    own partition; -1 when no fold has happened yet."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(state_path + "/_commits")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    committed: set = set()
-    watermark = -1
-    if not fs.exists(p):
-        return committed, watermark
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if not name.startswith("batch-"):
-            continue
-        body = name[len("batch-"):]
-        fold = body.endswith("-fold")
-        if fold:
-            body = body[: -len("-fold")]
-        try:
-            bid = int(body)
-        except ValueError:
-            continue
-        committed.add(bid)
-        if fold:
-            watermark = max(watermark, bid)
-    return committed, watermark
-
-
-def _commit_batch_fold(spark, state_path: str, batch_id: int) -> None:
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(
-        state_path + "/_commits", f"batch-{batch_id}-fold"
-    )
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(marker.getParent())
-    fs.create(marker, True).close()
-
-
-def _live_store(spark, path: str, state_path: str, exclude_batch: int):
-    """Committed, non-superseded register partitions — the only rows a
-    CMS reader may sum. ``exclude_batch`` drops the (possibly
-    half-written) partition of a replaying batch."""
-    committed, watermark = _committed_state(spark, state_path)
-    store = _read_store(spark, path)
-    if store is None or not committed:
-        return None
-    live = sorted(b for b in committed if b >= watermark and b != exclude_batch)
-    if not live:
-        return None
-    return store.where(F.col("__batch").isin(live))
 
 
 def incremental_cms_sink(
@@ -818,10 +802,11 @@ def incremental_cms_sink(
     `cms_state_estimates` sums the live partitions cellwise. Every
     ``compact_every`` batches the whole store folds into the current
     batch's partition, whose `-fold` commit marker atomically
-    supersedes the older partitions (see module comment). State is
-    bounded by ``compact_every * depth * width`` rows; superseded
-    partitions are GC'd after commit and harmless if a crash leaves
-    them behind.
+    supersedes the older partitions (module docstring). CMS merges by
+    cellwise SUM, so double-reading a partition would DOUBLE COUNT:
+    readers see only the committed live partitions. State is bounded by
+    ``compact_every * depth * width`` rows; superseded partitions are
+    GC'd after commit and harmless if a crash leaves them behind.
     """
     from datas_spark.operators.sketches import cms_registers
 
@@ -829,33 +814,15 @@ def incremental_cms_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        committed, watermark = _committed_state(spark, state_path)
-        if batch_id in committed:
+        if _is_committed(spark, state_path, batch_id):
             return
         regs = cms_registers(batch_df, value_col, depth=depth, width=width)
-        live_count = len([b for b in committed if b >= watermark])
-        fold = live_count >= compact_every
-        if fold:
-            prior = _live_store(spark, regs_path, state_path, exclude_batch=batch_id)
-            if prior is not None:
-                regs = (
-                    regs.unionByName(prior.select("row", "pos", "cnt"))
-                    .groupBy("row", "pos")
-                    .agg(F.sum("cnt").cast("long").alias("cnt"))
-                )
-        _write_batch_partition(regs, batch_id, regs_path)
-        if fold:
-            _commit_batch_fold(spark, state_path, batch_id)
-            _compact_batch_partitions(spark, regs_path, keep_from=batch_id)
-        else:
-            _commit_batch(spark, state_path, batch_id)
+        _fold_commit(
+            spark, state_path, regs_path, batch_id, regs, ["row", "pos"], F.sum,
+            compact_every,
+        )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def cms_state_estimates(
@@ -893,10 +860,8 @@ def quarantine_sink(
     `validate.quarantine` — clean rows append to ``good_path``, rows
     violating any rule land in ``bad_path`` with their
     ``failed_rules`` attached. The streaming twin of the batch
-    ingestion gate, with the same exactly-once scheme as the dedup
-    sinks: both writes are stamped into per-batch partitions
-    (idempotent replay), the commit marker is written last, and a
-    redelivered committed batch is skipped.
+    ingestion gate, exactly-once by the shared commit protocol (module
+    docstring).
 
     ``rules`` maps rule name -> Column predicate (NULL = violation),
     identical to the batch API — one set of rule semantics, two
@@ -906,7 +871,7 @@ def quarantine_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _batch_committed(spark, good_path, batch_id):
+        if _is_committed(spark, good_path, batch_id):
             return
         good, bad = quarantine(batch_df, rules)
         _write_batch_partition(good, batch_id, good_path + "/rows")
@@ -915,14 +880,9 @@ def quarantine_sink(
             batch_id,
             bad_path,
         )
-        _commit_batch(spark, good_path, batch_id)
+        _commit(spark, good_path, batch_id, fold=False)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def drift_monitor_sink(
@@ -945,10 +905,9 @@ def drift_monitor_sink(
     ``localCheckpoint`` at sink construction — the reference is fixed
     by contract); each batch joins its own counts against that frame
     with the same smoothed-JS expressions as the batch operator
-    `drift.term_drift`, reduced to one total. Batch stamping + commit
-    markers give the usual idempotent-replay story; the metrics table
-    is itself partition-per-batch, so re-delivered batches overwrite
-    their own row.
+    `drift.term_drift`, reduced to one total. The metrics table is
+    partition-per-batch under the shared commit protocol (module
+    docstring).
     """
     from datas_spark.operators.drift import term_counts
 
@@ -959,7 +918,7 @@ def drift_monitor_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _batch_committed(spark, metrics_path, batch_id):
+        if _is_committed(spark, metrics_path, batch_id):
             return
         ca = term_counts(batch_df, text_col).withColumnRenamed("cnt", "ca")
         joined = ca.join(ref_counts, "term", "full_outer")
@@ -990,14 +949,9 @@ def drift_monitor_sink(
             .select("n_docs", "n_terms", "js_total")
         )
         _write_batch_partition(row, batch_id, metrics_path + "/rows")
-        _commit_batch(spark, metrics_path, batch_id)
+        _commit(spark, metrics_path, batch_id, fold=False)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def trending_topk_sink(
@@ -1011,9 +965,8 @@ def trending_topk_sink(
     counts land in their own committed ``__batch`` partition;
     `trending_state_topk` sums the live partitions and ranks. Every
     ``compact_every`` batches the store folds into the current batch's
-    partition under the atomic `-fold` watermark marker (same
-    exactly-once protocol as the CMS sink — replayed batches are
-    skipped, a half-written partition is never live).
+    partition under the atomic `-fold` watermark marker (module
+    docstring; sum-merged like the CMS sink).
 
     State is O(|distinct items|) rows after every fold — the EXACT
     counter for catalog-sized item spaces; for unbounded key domains
@@ -1024,37 +977,19 @@ def trending_topk_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        committed, watermark = _committed_state(spark, state_path)
-        if batch_id in committed:
+        if _is_committed(spark, state_path, batch_id):
             return
         counts = (
             batch_df.where(F.col(item_col).isNotNull())
             .groupBy(F.col(item_col).alias("item"))
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         )
-        live_count = len([b for b in committed if b >= watermark])
-        fold = live_count >= compact_every
-        if fold:
-            prior = _live_store(spark, counts_path, state_path, exclude_batch=batch_id)
-            if prior is not None:
-                counts = (
-                    counts.unionByName(prior.select("item", "cnt"))
-                    .groupBy("item")
-                    .agg(F.sum("cnt").cast("long").alias("cnt"))
-                )
-        _write_batch_partition(counts, batch_id, counts_path)
-        if fold:
-            _commit_batch_fold(spark, state_path, batch_id)
-            _compact_batch_partitions(spark, counts_path, keep_from=batch_id)
-        else:
-            _commit_batch(spark, state_path, batch_id)
+        _fold_commit(
+            spark, state_path, counts_path, batch_id, counts, ["item"], F.sum,
+            compact_every,
+        )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def trending_state_topk(spark, state_path: str, k: int = 10) -> DataFrame:
@@ -1196,9 +1131,8 @@ def decontamination_sink(
 
     Bloom false positives can over-flag at the configured rate; never
     under-flag (no false negatives — the safe direction for
-    decontamination). Exactly-once via the standard per-batch
-    partition stamp + commit marker (redelivered committed batches
-    skip; half-written uncommitted partitions are invisible).
+    decontamination). Exactly-once by the shared commit protocol
+    (module docstring).
     """
     from datas_spark.functions.text import shingles_of_tokens, word_tokens
     from datas_spark.operators.sketches import (
@@ -1257,7 +1191,7 @@ def decontamination_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _batch_committed(spark, clean_path, batch_id):
+        if _is_committed(spark, clean_path, batch_id):
             return
         probed = _probe(batch_df)
         _write_batch_partition(
@@ -1268,14 +1202,9 @@ def decontamination_sink(
         _write_batch_partition(
             probed.where(F.col("n_hits") > max_hits), batch_id, flagged_path
         )
-        _commit_batch(spark, clean_path, batch_id)
+        _commit(spark, clean_path, batch_id, fold=False)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def semantic_decontamination_sink(
@@ -1303,10 +1232,8 @@ def semantic_decontamination_sink(
     vectors map-side with the SAME seed-pinned planes and meets the
     benchmark in a bucket equi-join (never a cross join), exact JVM
     cosine inside buckets only — the proven `cross_contamination`
-    shape, per batch. Exactly-once via the per-batch-partition +
-    commit-marker protocol shared by every sink here; flagged and
-    clean writes land before the marker, so a replayed batch
-    overwrites its own partitions idempotently.
+    shape, per batch. Exactly-once by the shared commit protocol
+    (module docstring).
     """
     from datas_spark.functions.arrays import cosine_similarity
     from datas_spark.operators.similarity import (
@@ -1326,7 +1253,7 @@ def semantic_decontamination_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _batch_committed(spark, flagged_path, batch_id):
+        if _is_committed(spark, flagged_path, batch_id):
             return
         tb = hyperplane_signature(batch_df, vec_col, planes)
         cos = cosine_similarity(F.col(vec_col), F.col("__bvec"))
@@ -1346,14 +1273,9 @@ def semantic_decontamination_sink(
         )
         _write_batch_partition(flagged, batch_id, flagged_path + "/rows")
         _write_batch_partition(clean, batch_id, clean_path)
-        _commit_batch(spark, flagged_path, batch_id)
+        _commit(spark, flagged_path, batch_id, fold=False)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 # ---------------------------------------------------------------------------
@@ -1373,9 +1295,9 @@ def scd2_sink(
     change events is MERGEd into the durable history with
     `cdc.merge_scd2` (touched keys replayed, untouched pass through),
     and the FULL post-merge table lands in the batch's own ``__batch``
-    partition — a fold-every-batch versioned store, the same watermark
-    scheme the CMS/trending sinks use for compaction, degenerate case
-    "every batch folds". Dimensions are small relative to facts, so
+    partition — a fold-every-batch versioned store: the shared commit
+    protocol (module docstring) in its degenerate case "every batch
+    folds". Dimensions are small relative to facts, so
     rewriting the table per batch is the honest cost of a table whose
     rows MUTATE (intervals close); the append-only partition tricks of
     the dedup sinks don't apply.
@@ -1399,19 +1321,10 @@ def scd2_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # this sink commits only fold markers (`batch-<B>-fold`), so the
-        # replay guard must read them through _committed_state (which
-        # strips the -fold suffix) — a plain `batch-<B>` probe never
-        # fires and every checkpoint redelivery would re-run the merge
-        committed, watermark = _committed_state(spark, state_path)
-        if batch_id in committed:
+        if _is_committed(spark, state_path, batch_id):
             return
         changes = batch_df.select(*key_cols, *attr_cols, ts_col, seq_col)
-        prior = None
-        if watermark >= 0:
-            store = _read_store(spark, store_path)
-            if store is not None:
-                prior = store.where(F.col("__batch") == watermark).drop("__batch")
+        prior = scd2_state(spark, state_path)
         if prior is None:
             merged = scd2_from_changelog(changes, key_cols, attr_cols, ts_col, seq_col)
         else:
@@ -1420,15 +1333,10 @@ def scd2_sink(
         # store partition it is about to supersede through live lineage
         merged = merged.localCheckpoint(eager=True)
         _write_batch_partition(merged, batch_id, store_path)
-        _commit_batch_fold(spark, state_path, batch_id)
+        _commit(spark, state_path, batch_id, fold=True)
         _compact_batch_partitions(spark, store_path, keep_from=batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def scd2_state(spark, state_path: str) -> DataFrame | None:
@@ -1515,10 +1423,8 @@ def ivm_join_view_sink(
 
     Layout under ``state_path``: ``a/`` and ``b/`` accumulate the
     relations, ``view/`` accumulates join rows; all three are
-    batch-partitioned with the shared commit-marker scheme (replays
-    overwrite their own partitions; a crashed batch's partial
-    partitions are excluded from its replay's probes), so the view is
-    exactly-once.
+    batch-partitioned under the shared commit protocol (module
+    docstring), so the view is exactly-once.
 
     Column contract: besides ``side_col`` and ``keys``, 'a' rows carry
     ``a_cols`` (NULL on 'b' rows) and 'b' rows carry ``b_cols``; the
@@ -1534,7 +1440,7 @@ def ivm_join_view_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _batch_committed(spark, state_path, batch_id):
+        if _is_committed(spark, state_path, batch_id):
             return
         da = batch_df.where(F.col(side_col) == "a").select(*keys, *a_cols)
         db = batch_df.where(F.col(side_col) == "b").select(*keys, *b_cols)
@@ -1563,14 +1469,9 @@ def ivm_join_view_sink(
         _write_batch_partition(delta, batch_id, view_path)
         _write_batch_partition(da, batch_id, a_path)
         _write_batch_partition(db, batch_id, b_path)
-        _commit_batch(spark, state_path, batch_id)
+        _commit(spark, state_path, batch_id, fold=False)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def ivm_view_state(spark, state_path: str) -> DataFrame | None:
@@ -1767,11 +1668,9 @@ def sequential_monitor_sink(
     store into the current z / OBF-boundary readout at any moment.
 
     Moments merge by SUM, so like the CMS sink (and unlike HLL's
-    idempotent max) correctness hangs on the commit-marker protocol:
-    replayed batches short-circuit on their marker, readers see only
-    committed partitions at or above the fold watermark, and every
-    ``compact_every`` batches the whole store folds into one ≤|arms|-
-    row partition whose `-fold` marker atomically supersedes the rest.
+    idempotent max) correctness hangs on the commit protocol (module
+    docstring); every ``compact_every`` batches the whole store folds
+    into one ≤|arms|-row partition.
 
     The input ``stream`` carries one row per UNIT-EVENT (a unit may
     appear in many batches; moments accumulate per event — monitor
@@ -1781,8 +1680,7 @@ def sequential_monitor_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        committed, watermark = _committed_state(spark, state_path)
-        if batch_id in committed:
+        if _is_committed(spark, state_path, batch_id):
             return
         y = F.col(y_col).cast("decimal(38,0)")
         mom = batch_df.groupBy(F.col(arm_col).cast("int").alias("arm")).agg(
@@ -1790,33 +1688,12 @@ def sequential_monitor_sink(
             F.sum(y).cast("decimal(38,0)").alias("sy"),
             F.sum(y * y).cast("decimal(38,0)").alias("syy"),
         )
-        live_count = len([b for b in committed if b >= watermark])
-        fold = live_count >= compact_every
-        if fold:
-            prior = _live_store(spark, mom_path, state_path, exclude_batch=batch_id)
-            if prior is not None:
-                mom = (
-                    mom.unionByName(prior.select("arm", "n", "sy", "syy"))
-                    .groupBy("arm")
-                    .agg(
-                        F.sum("n").cast("long").alias("n"),
-                        F.sum("sy").cast("decimal(38,0)").alias("sy"),
-                        F.sum("syy").cast("decimal(38,0)").alias("syy"),
-                    )
-                )
-        _write_batch_partition(mom, batch_id, mom_path)
-        if fold:
-            _commit_batch_fold(spark, state_path, batch_id)
-            _compact_batch_partitions(spark, mom_path, keep_from=batch_id)
-        else:
-            _commit_batch(spark, state_path, batch_id)
+        _fold_commit(
+            spark, state_path, mom_path, batch_id, mom, ["arm"], F.sum,
+            compact_every,
+        )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream.writeStream, _sink, checkpoint_path)
 
 
 def sequential_monitor_state(

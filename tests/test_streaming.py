@@ -1355,6 +1355,41 @@ def test_sink_restart_equals_uninterrupted(spark, tmp_path, name, drill, state, 
     assert state(spark, root_a) == state(spark, root_b)
 
 
+@pytest.mark.parametrize(
+    "name,drill,state,data", _RESTART_DRILLS, ids=[d[0] for d in _RESTART_DRILLS]
+)
+@pytest.mark.slow
+def test_sink_skips_redelivered_batches(spark, tmp_path, name, drill, state, data):
+    """A fresh checkpoint over the same source redelivers every batch
+    id; the replay guard must skip each one under its marker name
+    (plain or ``-fold``), leaving the state and every store file as the
+    first run wrote them."""
+    import json as _json
+    import shutil
+
+    src = str(tmp_path / "src"); os.makedirs(src)
+    root = str(tmp_path / "root")
+    for i in range(3):
+        with open(os.path.join(src, f"f{i}.json"), "w") as fh:
+            for row in data(i):
+                fh.write(_json.dumps(row) + "\n")
+
+    def store_files():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, files in os.walk(root)
+            if not os.path.relpath(d, root).startswith("ckpt")
+            for f in files
+        )
+
+    drill(spark, src, root)
+    first, files = state(spark, root), store_files()
+    shutil.rmtree(root + "/ckpt")
+    drill(spark, src, root)
+    assert state(spark, root) == first
+    assert store_files() == files
+
+
 @pytest.mark.parametrize("backend", ["literal", "join"])
 def test_decontamination_sink_routes_and_restart_safe(spark, tmp_path, backend):
     import json as _json
